@@ -16,19 +16,6 @@ from pyspark.sql import functions as F
 # --------------------------------------------------------------------------
 
 
-def parse_iso_timestamp(col: Column | str) -> Column:
-    """F1 — ISO-8601 parse; tz stripped before epoch math like the
-    reference's ``tz_localize(None)`` (flow_analyzer.py:199-204).
-    Session TZ is pinned UTC so this is a plain ``to_timestamp``."""
-    return F.to_timestamp(col)
-
-
-def strip_tz_suffix(col: Column | str) -> Column:
-    """F1 — the notebook's ``ts.split('+')[0]`` tz strip
-    (performance.ipynb cell 4)."""
-    return F.split(F.col(col) if isinstance(col, str) else col, r"\+")[0]
-
-
 def epoch_seconds(ts: Column | str) -> Column:
     """F2 — timestamp → float epoch seconds
     ((to_datetime - 1970-01-01)/1s, flow_analyzer.py:199-204).
@@ -41,44 +28,9 @@ def epoch_seconds(ts: Column | str) -> Column:
     return c.cast("timestamp").cast("double")
 
 
-def duration_seconds(start: Column, end: Column) -> Column:
-    """F3 — ``(completion - request).total_seconds()``
-    (flow_analyzer.py:251,260)."""
-    return epoch_seconds(end) - epoch_seconds(start)
-
-
-def epoch_ns_to_seconds(ns: Column | str) -> Column:
-    """F4 — int64 epoch-nanoseconds → float seconds
-    (``/1_000_000_000``, performance.ipynb cell 8)."""
-    c = F.col(ns) if isinstance(ns, str) else ns
-    return c / F.lit(1e9)
-
-
-def dir_timestamp(fmt: str = "yyyyMMdd-HHmmss") -> Column:
-    """F5 — ``datetime.now().strftime('%Y%m%d-%H%M%S')`` dest-dir stamp
-    (examples/hyperspectral_flow/main.py:59)."""
-    return F.date_format(F.current_timestamp(), fmt)
-
-
 # --------------------------------------------------------------------------
 # Strings & paths (F6-F9)
 # --------------------------------------------------------------------------
-
-
-def runtime_col_name(step: Column | str) -> Column:
-    """F6 — f-string label ``f"{step}_runtime"`` (flow_analyzer.py:216)."""
-    c = F.col(step) if isinstance(step, str) else step
-    return F.concat(c, F.lit("_runtime"))
-
-
-def strip_suffix(col: Column, suffix: str) -> Column:
-    """F8 — ``c.replace("_runtime", "")`` (flow_analyzer.py:360-365)."""
-    return F.regexp_replace(col, f"{suffix}$", "")
-
-
-def strip_prefix(col: Column, prefix: str) -> Column:
-    """F8 — ``tgid.replace("tg_", "")`` (performance.ipynb cell 8)."""
-    return F.regexp_replace(col, f"^{prefix}", "")
 
 
 def path_name(path: Column | str) -> Column:
@@ -125,36 +77,6 @@ def energy_axis_kev(channel: Column, offset: float, increment: float) -> Column:
     return (F.lit(offset) + F.lit(increment) * channel) / F.lit(1000.0)
 
 
-def bytes_to_gb(col: Column | str) -> Column:
-    """F12 — ``bytes / 1024**3`` (flow_analyzer.py:144-146)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c / F.lit(float(1024 ** 3))
-
-
-# --------------------------------------------------------------------------
-# JSON / nested (F13-F17, F20)
-# --------------------------------------------------------------------------
-
-
-def json_get(col: Column | str, jsonpath: str) -> Column:
-    """F14/F20 — JSONPath extraction; same ``$.a.b[0].c`` dialect as the
-    flow payload wiring (examples/hyperspectral_flow/main.py:24)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, jsonpath)
-
-
-def explode_map(col: Column | str) -> Column:
-    """F15 — dynamic-key dict iteration (flow_analyzer.py:244,280,315)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.explode(F.map_entries(c))
-
-
-def last_element(arr: Column | str) -> Column:
-    """F17 — ``entries[-1]`` (flow_analyzer.py:177)."""
-    c = F.col(arr) if isinstance(arr, str) else arr
-    return F.element_at(c, -1)
-
-
 # --------------------------------------------------------------------------
 # Checksums & classification (F18-F19)
 # --------------------------------------------------------------------------
@@ -164,12 +86,6 @@ def sha256_hex(col: Column | str) -> Column:
     """F18 — per-file sha256 in the publish doc ``files[]``."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sha2(c.cast("binary"), 256)
-
-
-def sha512_hex(col: Column | str) -> Column:
-    """F18 — per-file sha512 in the publish doc ``files[]``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c.cast("binary"), 512)
 
 
 #: F19 — extension → mime map observed in the publish documents

@@ -78,11 +78,6 @@ def cosine_prenorm(a: Column, b: Column,
     return F.try_divide(dot(a, b), na * nb)
 
 
-def euclidean(a: Column, b: Column) -> Column:
-    diff = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
 def scale(a: Column, s: Column | float) -> Column:
     sc = F.lit(s) if isinstance(s, (int, float)) else s
     return F.transform(a, lambda x: x.cast("double") * sc)

@@ -99,8 +99,8 @@ def incremental_ingest(new_files: DataFrame, processed: DataFrame | None) -> Dat
     O(log lifetime) where the pass's contract is ∝ new files. The
     new batch's (path, sha256) key set is ingest-cadence-bounded
     (broadcast-size)."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        batch_anti_state
+    # Imported here: the streaming package imports this module.
+    from picoprobedataflow_spark.streaming.loop import batch_anti_state
     manifest = file_manifest(new_files)
     if processed is None:
         return manifest
@@ -114,15 +114,3 @@ def write_catalog(docs: DataFrame, path: str, mode: str = "append") -> None:
     'search index'); dedup-on-read via the latest doc per dataset_id."""
     (docs.withColumn("ingest_date", F.current_date())
          .write.mode(mode).partitionBy("ingest_date").parquet(path))
-
-
-def search_catalog(spark: SparkSession, path: str,
-                   text_like: str | None = None) -> DataFrame:
-    """Query the publish catalog — Globus-Search-style lookup becomes
-    plain SQL over the parquet table (partition-pruned by date)."""
-    df = spark.read.parquet(path)
-    if text_like:
-        df = df.filter(F.col("dataset_id").contains(text_like)
-                       | F.exists("files",
-                                  lambda f: f.filename.contains(text_like)))
-    return df

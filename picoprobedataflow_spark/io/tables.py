@@ -161,10 +161,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: tuple[str, ...] = TABLE_NAMES) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -77,7 +77,9 @@ def _parse_wet(raw: DataFrame,
     parts = F.split(F.col("_r"), r"\r?\n\r?\n", 2)
     # The FINAL record of a file keeps its two-CRLF record
     # terminator (mid-file ones lose it to the separator split) —
-    # strip exactly one terminator, never content newlines.
+    # strip exactly one terminator, never content newlines. \z,
+    # not \Z: Java's \Z also matches before a final line
+    # terminator, so a body ending "\r\n\r\n\n" lost its blank lines.
     # F.get, not getItem: a record with NO header/body divider (a
     # CR-only member, a truncated tail) splits to ONE part, and
     # under the engine's ANSI sessions getItem(1) aborts the whole
@@ -86,7 +88,7 @@ def _parse_wet(raw: DataFrame,
     rec = rec.select(*ex,
                      parts.getItem(0).alias("_hdr"),
                      F.regexp_replace(F.get(parts, 1),
-                                      r"\r\n\r\n\Z", "")
+                                      r"\r\n\r\n\z", "")
                      .alias("_body"))
     out = rec.select(
         *ex,

@@ -53,14 +53,3 @@ def bin_range_join(points: DataFrame, intervals: DataFrame,
                .filter((F.col(ts_col) >= F.col(start_col))
                        & (F.col(ts_col) <= F.col(end_col))))
     return joined.drop("_bin")
-
-
-def points_in_run_spans(events: DataFrame, runs: DataFrame,
-                        bin_width: int = 3_600_000_000) -> DataFrame:
-    """The reference-shaped use: tag each event with the run whose
-    [start_us, end_us] span contains it (flow_analyzer's per-run log
-    containment, relationally). ``runs`` columns: run_id, start_us,
-    end_us."""
-    return bin_range_join(
-        events, runs, ts_col="ts", start_col="start_us",
-        end_col="end_us", bin_width=bin_width)

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from picoprobedataflow_spark.io.tables import load_table
+from picoprobedataflow_spark.streaming.loop import await_drain
 
 _RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
@@ -116,9 +117,7 @@ def drain_stream_to_local(spark: SparkSession, agg: DataFrame,
          .option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     try:
-        if not q.awaitTermination(timeout):
-            raise TimeoutError(
-                f"stream drain {name} did not finish in {timeout}s")
+        await_drain(q, timeout, f"stream drain {name}")
         sink = spark.table(name)
         # The memory sink already holds its rows on the driver; lift
         # them into a local DataFrame so the sink view and checkpoint

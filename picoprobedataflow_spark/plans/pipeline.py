@@ -2149,38 +2149,6 @@ def semdedup_served_prune(spark: SparkSession,
                               cent_rows=cent_rows)
 
 
-def _pq_oracle(m: int, k: int, n_iter: int, topk: int,
-               dim: int = 64) -> str:
-    sub = dim // m
-    ctes: list[str] = []
-    for i in range(m):
-        ctes += _kmeans_build_ctes(k, n_iter, dim=sub, suffix=f"_s{i}",
-                                   slice_lo=i * sub + 1)
-        ctes.append(
-            f"q_s{i} AS (SELECT CAST(embedding AS DOUBLE[])"
-            f"[{i * sub + 1}:{(i + 1) * sub}] AS qv\n"
-            "     FROM embeddings WHERE vec_id = 0)")
-        qdist = " + ".join(
-            f"(q.qv[{j}] - c.c[{j}]) * (q.qv[{j}] - c.c[{j}])"
-            for j in range(1, sub + 1))
-        ctes.append(f"""lut_s{i} AS (
-  SELECT c.cell, {qdist} AS d
-  FROM cents{n_iter}_s{i} c CROSS JOIN q_s{i} q)""")
-    joins = "\n".join(
-        [f"JOIN assignf_s{i} a{i} USING (vec_id)" for i in range(1, m)]
-        + [f"JOIN lut_s{i} l{i} ON l{i}.cell = a{i}.cell"
-           for i in range(m)])
-    cols = ", ".join(f"a{i}.cell AS c{i}" for i in range(m))
-    dsum = " + ".join(f"l{i}.d" for i in range(m))
-    return "WITH " + ",\n".join(ctes) + f"""
-SELECT a0.vec_id, {cols}, round({dsum}, 6) AS adc
-FROM assignf_s0 a0
-{joins}
-ORDER BY round({dsum}, 6), a0.vec_id
-LIMIT {topk}
-"""
-
-
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 nearest vectors to the reserved query vector (vec 0)
     by product-quantization asymmetric distance: 4 subspaces × 8
@@ -5021,45 +4989,6 @@ def epoch_shuffle_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVFPQ_PROBE, _IVFPQ_TOPK = 2, 10
 
 
-def _ivfpq_oracle(n_cells: int, n_probe: int, m: int, k: int,
-                  n_iter: int, topk: int, dim: int = 64) -> str:
-    sub = dim // m
-    ctes = _kmeans_build_ctes(n_cells, n_iter, dim)          # coarse
-    ctes.append("q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv\n"
-                "     FROM embeddings WHERE vec_id = 0)")
-    ctes.append(f"""probe AS (
-  SELECT cell FROM cents{n_iter}
-  ORDER BY list_cosine_similarity(c, (SELECT qv FROM q)) DESC, cell
-  LIMIT {n_probe})""")
-    for i in range(m):
-        ctes += _kmeans_build_ctes(k, n_iter, dim=sub, suffix=f"_s{i}",
-                                   slice_lo=i * sub + 1)
-        ctes.append(
-            f"q_s{i} AS (SELECT CAST(embedding AS DOUBLE[])"
-            f"[{i * sub + 1}:{(i + 1) * sub}] AS qv\n"
-            "     FROM embeddings WHERE vec_id = 0)")
-        qdist = " + ".join(
-            f"(q.qv[{j}] - c.c[{j}]) * (q.qv[{j}] - c.c[{j}])"
-            for j in range(1, sub + 1))
-        ctes.append(f"""lut_s{i} AS (
-  SELECT c.cell, {qdist} AS d
-  FROM cents{n_iter}_s{i} c CROSS JOIN q_s{i} q)""")
-    joins = "\n".join(
-        [f"JOIN assignf_s{i} a{i} USING (vec_id)" for i in range(m)]
-        + [f"JOIN lut_s{i} l{i} ON l{i}.cell = a{i}.cell"
-           for i in range(m)])
-    cols = ", ".join(f"a{i}.cell AS c{i}" for i in range(m))
-    dsum = " + ".join(f"l{i}.d" for i in range(m))
-    return "WITH " + ",\n".join(ctes) + f"""
-SELECT a.vec_id, a.cell, {cols}, round({dsum}, 6) AS adc
-FROM assignf a
-{joins}
-WHERE a.cell IN (SELECT cell FROM probe)
-ORDER BY round({dsum}, 6), a.vec_id
-LIMIT {topk}
-"""
-
-
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-10 for the reserved query vector: the full-space
     8-cell coarse quantizer restricts the scan to the 2 cells nearest
@@ -5453,53 +5382,6 @@ def batch_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # becomes per-probed-cell. The oracle chains the coarse build, a
 # residual CTE, and four subspace builds OVER the residual stream.
 # --------------------------------------------------------------------------
-
-
-def _ivfpq_residual_oracle(n_cells: int, n_probe: int, m: int, k: int,
-                           n_iter: int, topk: int,
-                           dim: int = 64) -> str:
-    sub = dim // m
-    ctes = _kmeans_build_ctes(n_cells, n_iter, dim)          # coarse
-    ctes.append("q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv\n"
-                "     FROM embeddings WHERE vec_id = 0)")
-    ctes.append(f"""probe AS (
-  SELECT cell FROM cents{n_iter}
-  ORDER BY list_cosine_similarity(c, (SELECT qv FROM q)) DESC, cell
-  LIMIT {n_probe})""")
-    ctes.append(f"""rve AS MATERIALIZED (
-  SELECT e.vec_id,
-         list_transform(range(1, {dim + 1}), i -> e.v[i] - c.c[i]) AS v
-  FROM ve e
-  JOIN assignf a USING (vec_id)
-  JOIN cents{n_iter} c ON a.cell = c.cell)""")
-    for i in range(m):
-        o = i * sub
-        ctes += _kmeans_build_ctes(k, n_iter, dim=sub, suffix=f"_r{i}",
-                                   slice_lo=o + 1, source="rve")
-        qdist = " + ".join(
-            f"((q.qv[{o + j}] - cc.c[{o + j}]) - c.c[{j}])"
-            f" * ((q.qv[{o + j}] - cc.c[{o + j}]) - c.c[{j}])"
-            for j in range(1, sub + 1))
-        ctes.append(f"""lut_r{i} AS (
-  SELECT p.cell, c.cell AS code, {qdist} AS d
-  FROM probe p
-  JOIN cents{n_iter} cc ON cc.cell = p.cell
-  CROSS JOIN cents{n_iter}_r{i} c
-  CROSS JOIN q)""")
-    joins = "\n".join(
-        [f"JOIN assignf_r{i} a{i} USING (vec_id)" for i in range(m)]
-        + [f"JOIN lut_r{i} l{i} ON l{i}.cell = a.cell"
-           f" AND l{i}.code = a{i}.cell" for i in range(m)])
-    cols = ", ".join(f"a{i}.cell AS c{i}" for i in range(m))
-    dsum = " + ".join(f"l{i}.d" for i in range(m))
-    return "WITH " + ",\n".join(ctes) + f"""
-SELECT a.vec_id, a.cell, {cols}, round({dsum}, 6) AS adc
-FROM assignf a
-{joins}
-WHERE a.cell IN (SELECT cell FROM probe)
-ORDER BY round({dsum}, 6), a.vec_id
-LIMIT {topk}
-"""
 
 
 def ann_ivfpq_residual_topk(spark: SparkSession,
@@ -6962,10 +6844,6 @@ def _suite_oracle(idx: int) -> str:
 _LLM_SUITE_ORACLE = _suite_oracle(1)
 _LLM_SUITE2_ORACLE = _suite_oracle(2)
 _LLM_SUITE3_ORACLE = _suite_oracle(3)
-
-
-def _nulls_long():
-    return F.lit(None).cast("long")
 
 
 def _fam_df(df, family: str, k1=None, n=(), v=(), b1=None):

@@ -83,19 +83,3 @@ def get_spark(app_name: str = "picoprobedataflow_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_existing(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable confs to a session we didn't build.
-
-    The driver passes its own SparkSession to ``entry()``/``queries()``;
-    static confs (memory, master) are already fixed, but SQL confs can
-    still be aligned so query semantics (timezone!) match the oracle.
-    """
-    for k, v in _BASE_CONFS.items():
-        if k.startswith("spark.sql."):
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                pass  # non-runtime conf on this build — keep going
-    return spark

@@ -5,7 +5,7 @@ The CMS is a MONOID: cells are sums, so the sketch of a union is the
 cell-wise sum of the sketches — the property that makes it the
 canonical streaming frequency summary (and what HLL is to distinct
 counts, this is to counts). The loop keeps one (seed, bucket, cell)
-delta table per epoch under the :mod:`.dedup_stream` state
+delta table per epoch under the :mod:`.loop` state
 conventions; querying merges the deltas with one d·w-bounded
 aggregate. A drained stream's merged cells are BIT-IDENTICAL to the
 one-shot batch sketch of the same corpus (pytest-pinned — exact, not
@@ -38,8 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from picoprobedataflow_spark.streaming.dedup_stream import (
-    _state, _write_epoch)
+from picoprobedataflow_spark.streaming.loop import (
+    ensure_params, read_params, read_state, start_epoch_loop,
+    write_epoch)
 
 CELL_SCHEMA = "seed int, bucket long, cell long"
 
@@ -59,11 +60,9 @@ def read_meta(spark: SparkSession,
     occur, breaking the sketch's no-false-negative guarantee — so
     the geometry lives with the state, not in caller defaults
     (round-15 ADVICE fix). Backed by the shared
-    :func:`..streaming.dedup_stream.read_params` state-identity
+    :func:`..streaming.loop.read_params` state-identity
     table (round-16 dedup: one persistence mechanism, hardened
     once)."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        read_params
     p = read_params(spark, state_dir)
     return (int(p["w"]), int(p["d"])) if p else None
 
@@ -73,15 +72,13 @@ def _ensure_meta(spark: SparkSession, state_dir: str,
     """Persist (w, d) on first run; on a resumed state dir, reject a
     geometry change loudly (cells built under two geometries would
     merge into nonsense)."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        _ensure_params
     existing = read_meta(spark, state_dir)
     if existing is not None and existing != (w, d):
         raise ValueError(
             f"sketch geometry mismatch: state dir {state_dir} "
             f"was built with (w, d)={existing}, caller asked "
             f"for ({w}, {d})")
-    _ensure_params(spark, state_dir, {"w": str(w), "d": str(d)})
+    ensure_params(spark, state_dir, {"w": str(w), "d": str(d)})
 
 
 def _bucket(tok, seed, w: int):
@@ -137,24 +134,18 @@ def run_cms_stream(doc_stream: DataFrame, state_dir: str,
     def _process(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        _write_epoch(_cells_of(batch, text_col, w, d),
-                     cell_dir, epoch_id)
+        write_epoch(_cells_of(batch, text_col, w, d),
+                    cell_dir, epoch_id)
 
-    writer = (doc_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_epoch_loop(doc_stream, _process, checkpoint_dir,
+                            available_now)
 
 
 def merged_cells(spark: SparkSession, state_dir: str) -> DataFrame:
     """(seed, bucket, cell): the epoch deltas merged — the monoid
     sum, ≤ d·w rows."""
     cell_dir = os.path.join(state_dir, "cells")
-    return (_state(spark, cell_dir, CELL_SCHEMA)
+    return (read_state(spark, cell_dir, CELL_SCHEMA)
             .groupBy("seed", "bucket")
             .agg(F.sum("cell").cast("long").alias("cell")))
 

@@ -1,7 +1,7 @@
 """Streaming curation: the batch funnel's stateless-head stages
 (quality → repetition → exact-dedup-vs-state → decontamination →
 domain-quota admission) composed into ONE micro-batch pipeline on the
-:mod:`.dedup_stream` state pattern — the daily-crawl ingest loop run
+:mod:`.loop` state pattern — the daily-crawl ingest loop run
 continuously, where the batch flow (:func:`..flows.curation.
 curate_documents`) is the one-shot re-curation run.
 
@@ -29,7 +29,7 @@ durable cross-batch state the corpus-wide stages need:
 
 All writes are per-epoch DYNAMIC partition overwrites — a replayed
 epoch overwrites its own partitions instead of appending duplicates
-(the dedup_stream exactly-once posture). The decontamination
+(the :mod:`.loop` exactly-once posture). The decontamination
 benchmark universe is localCheckpointed ONCE outside the loop (the
 round-13 decontam_stream amortization rule — rebuilding the bench
 shingle source per micro-batch is the anti-pattern it fixed).
@@ -48,8 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from picoprobedataflow_spark.streaming.dedup_stream import (
-    _state, _write_epoch, batch_anti_state)
+from picoprobedataflow_spark.streaming.loop import (
+    batch_anti_state, read_state, start_epoch_loop, write_epoch)
 
 FP_SCHEMA = "fingerprint string"
 DOMAIN_SCHEMA = "domain string, n long"
@@ -136,8 +136,8 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
         # untouched — it is nobody's duplicate, matching the batch
         # flow's fingerprint-join semantics when the quality gate
         # (which otherwise drops NULL texts) is disabled.
-        seen = _state(spark, fp_dir, FP_SCHEMA,
-                      before_epoch=epoch_id)
+        seen = read_state(spark, fp_dir, FP_SCHEMA,
+                          before_epoch=epoch_id)
         withfp = cur.withColumn("_fp", fingerprint_md5(text_col))
         firsts = (withfp.filter(F.col("_fp").isNotNull())
                   .groupBy("_fp")
@@ -202,8 +202,8 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
             # broadcasts. Restricting before the LEFT join is an
             # identity (unmatched domains never join).
             batch_doms = ranked.select("domain").distinct()
-            prior = (_state(spark, dom_dir, DOMAIN_SCHEMA,
-                            before_epoch=epoch_id)
+            prior = (read_state(spark, dom_dir, DOMAIN_SCHEMA,
+                                before_epoch=epoch_id)
                      .join(F.broadcast(batch_doms), "domain",
                            "left_semi")
                      .groupBy("domain")
@@ -234,22 +234,16 @@ def run_curation_stream(doc_stream: DataFrame, state_dir: str,
             cur = cur.drop("_fp").localCheckpoint(eager=True)
             new_doms = None
 
-        # kept BEFORE state (the dedup_stream replay rule): a
+        # kept BEFORE state (the loop-kit replay rule): a
         # replayed epoch recomputes against pre-epoch state and
         # overwrites its own partitions.
-        _write_epoch(cur, kept_dir, epoch_id)
-        _write_epoch(new_fps, fp_dir, epoch_id)
+        write_epoch(cur, kept_dir, epoch_id)
+        write_epoch(new_fps, fp_dir, epoch_id)
         if new_doms is not None:
-            _write_epoch(new_doms, dom_dir, epoch_id)
-        _write_epoch(
+            write_epoch(new_doms, dom_dir, epoch_id)
+        write_epoch(
             spark.createDataFrame(funnel, FUNNEL_SCHEMA),
             funnel_dir, epoch_id)
 
-    writer = (doc_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_epoch_loop(doc_stream, _process, checkpoint_dir,
+                            available_now)

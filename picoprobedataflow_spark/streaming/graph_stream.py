@@ -23,7 +23,7 @@ the classic incremental/online PageRank argument. Per-epoch work is
 ``pagerank_cold10_full`` bench comparator quantifies
 (COVERAGE.md round 15).
 
-State layout (the :mod:`.dedup_stream` conventions): ``edges/`` —
+State layout (the :mod:`.loop` conventions): ``edges/`` —
 accumulated distinct edges, per-epoch partitions; ``ranks/`` — one
 rank vector per epoch (full precision; round at read time). All
 writes are per-epoch dynamic partition overwrites and every state
@@ -52,8 +52,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from picoprobedataflow_spark.streaming.dedup_stream import (
-    _fs_list, _state, _write_epoch)
+from picoprobedataflow_spark.streaming.loop import (
+    batch_anti_state, ensure_params, fs_list, read_state,
+    start_epoch_loop, write_epoch)
 
 EDGE_SCHEMA = "src string, dst string"
 RANK_SCHEMA = "node string, pr double"
@@ -71,7 +72,7 @@ def _max_rank_epoch(spark, rank_dir: str,
     a remote ``state_dir`` (hdfs://, s3a://) silently return None —
     every epoch then ran the cold path and rank reads degraded to
     empty; now remote URIs resolve or fail loudly."""
-    names = _fs_list(spark, rank_dir)
+    names = fs_list(spark, rank_dir)
     if names is None:
         return None
     best = None
@@ -113,8 +114,6 @@ def epoch_graph(prior_edges: DataFrame, delta: DataFrame,
     inspection; the stream always materializes (new_edges feeds two
     consumers — the state write and the union; graph feeds every
     iteration)."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        batch_anti_state
     new_edges = batch_anti_state(delta, prior_edges,
                                  ["src", "dst"], batch_keys=delta)
     if materialize:
@@ -144,8 +143,6 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
     epoch runs ``n_iter_warm`` iterations warm-started from the
     previous epoch's vector over the GROWN graph."""
     from picoprobedataflow_spark.operators.graph import pagerank
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        _ensure_params
 
     spark = edge_stream.sparkSession
     # damping persists with the state (round 16, the CMS-geometry
@@ -157,8 +154,8 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
     # repr(float(...)) canonicalizes the pin (round-17 ADVICE fix):
     # damping=1 vs 1.0 vs numpy.float64(1.0) are the SAME setting
     # and a verbatim repr falsely rejected the legitimate resume.
-    _ensure_params(spark, state_dir,
-                   {"damping": repr(float(damping))})
+    ensure_params(spark, state_dir,
+                  {"damping": repr(float(damping))})
     edge_dir = os.path.join(state_dir, "edges")
     rank_dir = os.path.join(state_dir, "ranks")
 
@@ -177,8 +174,8 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
                  .localCheckpoint(eager=True))
         if not delta.head(1):
             return
-        prior_edges = _state(spark, edge_dir, EDGE_SCHEMA,
-                             before_epoch=epoch_id)
+        prior_edges = read_state(spark, edge_dir, EDGE_SCHEMA,
+                                 before_epoch=epoch_id)
         # new-to-state edges only: the edges/ table stays distinct
         # across epochs, so the per-epoch graph union never regrows
         # duplicates and a replayed epoch re-derives the same delta.
@@ -189,7 +186,7 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
         graph, new_edges = epoch_graph(prior_edges, delta)
         # prior vector = the LATEST pre-epoch rank partition (the
         # before_epoch scope keeps a replayed epoch from reading its
-        # own partial write back — the _state rule, applied to the
+        # own partial write back — the read_state rule, applied to the
         # max-epoch pick too); partition pruning makes the read
         # touch only that one epoch directory
         init = None
@@ -208,17 +205,11 @@ def run_pagerank_stream(edge_stream: DataFrame, state_dir: str,
             out = pagerank(graph, n_iter=n_iter_warm,
                            damping=damping, round_digits=None,
                            init_ranks=init, prebuilt=True)
-        _write_epoch(out.select("node", "pr"), rank_dir, epoch_id)
-        _write_epoch(new_edges, edge_dir, epoch_id)
+        write_epoch(out.select("node", "pr"), rank_dir, epoch_id)
+        write_epoch(new_edges, edge_dir, epoch_id)
 
-    writer = (edge_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_epoch_loop(edge_stream, _process, checkpoint_dir,
+                            available_now)
 
 
 def latest_ranks(spark, state_dir: str) -> DataFrame:

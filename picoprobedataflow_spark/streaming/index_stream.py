@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from picoprobedataflow_spark.operators.similarity import _assign_cells
+from picoprobedataflow_spark.streaming.loop import (
+    ensure_params, fs_list, start_epoch_loop)
 
 
 def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
@@ -61,9 +63,6 @@ def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
     must be able to scan whole."""
     import hashlib
 
-    from picoprobedataflow_spark.streaming.dedup_stream import (
-        _ensure_params, _fs_list)
-
     # sorted(): the digest must be ORDER-INSENSITIVE (round-16
     # review find) — the docstring sanctions cent_rows collected
     # from kmeans_centroids, and collect() order is not guaranteed
@@ -79,10 +78,10 @@ def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
     # fix). When index_dir itself is absent there is no state the
     # old quantizer could mix with, so a leftover pin is a ghost and
     # gets overwritten instead of rejecting the fresh build.
-    _ensure_params(spark, index_dir.rstrip("/") + "_params",
-                   {"centroids_md5": digest,
-                    "n_cells": str(len(cent_rows))},
-                   stale=_fs_list(spark, index_dir) is None)
+    ensure_params(spark, index_dir.rstrip("/") + "_params",
+                  {"centroids_md5": digest,
+                   "n_cells": str(len(cent_rows))},
+                  stale=fs_list(spark, index_dir) is None)
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
@@ -95,14 +94,8 @@ def run_ivf_index_stream(vec_stream: DataFrame, cent_rows,
                  .partitionBy("epoch", "cell")
                  .parquet(index_dir))
 
-    writer = (vec_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_epoch_loop(vec_stream, _process, checkpoint_dir,
+                            available_now)
 
 
 def read_ivf_index(spark, index_dir: str) -> DataFrame:
@@ -112,9 +105,8 @@ def read_ivf_index(spark, index_dir: str) -> DataFrame:
     :func:`..operators.similarity.ivf_index_search` over this frame
     partition-prunes its probe."""
     # Hadoop-FS existence probe (round-16 ADVICE class): os.path.isdir
-    # reads a remote index_dir (hdfs://, s3a://) as absent; _fs_list
+    # reads a remote index_dir (hdfs://, s3a://) as absent; fs_list
     # resolves any Spark-readable URI or fails loudly.
-    from picoprobedataflow_spark.streaming.dedup_stream import _fs_list
-    if _fs_list(spark, index_dir) is None:
+    if fs_list(spark, index_dir) is None:
         raise FileNotFoundError(index_dir)
     return spark.read.parquet(index_dir).drop("epoch")

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from picoprobedataflow_spark.streaming.loop import await_drain, drain_gate
+
 
 def dq_gate_stream(spark: SparkSession, src_dir: str, ckpt_dir: str,
                    out_dir: str, schema: StructType | str,
@@ -36,21 +38,8 @@ def dq_gate_stream(spark: SparkSession, src_dir: str, ckpt_dir: str,
     returning a partial metrics table."""
     from picoprobedataflow_spark.plans.telemetry import dq_metrics
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (dq_metrics(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"dq gate drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir, dq_metrics,
+               timeout, "dq gate drain")
 
 
 def contam_gate_stream(spark: SparkSession, src_dir: str,
@@ -106,30 +95,19 @@ def contam_gate_stream(spark: SparkSession, src_dir: str,
                 universe,
                 num_bits=bloom_bits_count).localCheckpoint(eager=True)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _score(batch_df: DataFrame) -> DataFrame:
         if bloom_bits_count is not None:
-            gated = contamination_overlap_bloom(
+            return contamination_overlap_bloom(
                 train_docs=batch_df, bench_shingles=bench_sh,
                 k=k, threshold=threshold,
                 num_bits=bloom_bits_count, bits=bits,
                 bloom_df=bloom_df, bench_universe=universe)
-        else:
-            gated = contamination_overlap(
-                train_docs=batch_df, bench_shingles=bench_sh,
-                k=k, threshold=threshold)
-        (gated.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
+        return contamination_overlap(
+            train_docs=batch_df, bench_shingles=bench_sh,
+            k=k, threshold=threshold)
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"contamination gate drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir, _score,
+               timeout, "contamination gate drain")
 
 
 def decontam_stream(spark: SparkSession, src_dir: str,
@@ -189,37 +167,25 @@ def decontam_stream(spark: SparkSession, src_dir: str,
                 universe,
                 num_bits=bloom_bits_count).localCheckpoint(eager=True)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _score(batch_df: DataFrame) -> DataFrame:
         if bloom_bits_count is not None:
             # Prebuilt hooks resolve the transport (bits -> literal,
             # bloom_df -> broadcast); num_bits must restate the width
             # the words array was built with.
-            cleaned = decontaminate_spans(
+            return decontaminate_spans(
                 batch_df, k=k, bench_universe=universe,
                 num_bits=bloom_bits_count, bits=bits,
                 bloom_df=bloom_df)
-        else:
-            # transport pinned: the universe is localCheckpointed
-            # once outside the loop and semi-joins per batch (the
-            # documented plan); "auto" on a stat-less checkpoint plan
-            # would pick the Bloom route and rebuild the filter EVERY
-            # micro-batch.
-            cleaned = decontaminate_spans(
-                batch_df, k=k, bench_universe=universe,
-                transport="direct")
-        (cleaned.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
+        # transport pinned: the universe is localCheckpointed once
+        # outside the loop and semi-joins per batch (the documented
+        # plan); "auto" on a stat-less checkpoint plan would pick the
+        # Bloom route and rebuild the filter EVERY micro-batch.
+        return decontaminate_spans(
+            batch_df, k=k, bench_universe=universe,
+            transport="direct")
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"decontam stream drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir, _score,
+               timeout, "decontam stream drain")
 
 
 #: Output schema of :func:`domain_quota_stream` rows (norm_url is
@@ -319,10 +285,7 @@ def domain_quota_stream(spark: SparkSession, src_dir: str,
          .format("parquet").option("path", out_dir)
          .trigger(availableNow=True)
          .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"domain quota drain did not finish in {timeout}s")
+    await_drain(q, timeout, "domain quota drain")
 
 
 #: Output schema of :func:`boiler_flag_stream` rows — one row per
@@ -435,10 +398,7 @@ def _prefix_df_stream(keyed: DataFrame, key_col: str,
          .format("parquet").option("path", out_dir)
          .trigger(availableNow=True)
          .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"{what} stream drain did not finish in {timeout}s")
+    await_drain(q, timeout, f"{what} stream drain")
 
 
 LINE_STREAM_OUT_SCHEMA = ("doc_id long, idx long, line_h long, "
@@ -515,21 +475,9 @@ def robots_gate_stream(spark: SparkSession, src_dir: str,
 
     rules_ckpt = rules.localCheckpoint(eager=True)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (robots_gate(batch_df, rules_ckpt, url_col=url_col)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"robots gate drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir,
+               lambda b: robots_gate(b, rules_ckpt, url_col=url_col),
+               timeout, "robots gate drain")
 
 
 def psi_drift_stream(spark: SparkSession, src_dir: str,
@@ -561,21 +509,9 @@ def psi_drift_stream(spark: SparkSession, src_dir: str,
     reference = psi_reference(ref, value_col, n_buckets,
                               materialize=True)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (psi_score(batch_df, value_col, reference)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"psi drift drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir,
+               lambda b: psi_score(b, value_col, reference),
+               timeout, "psi drift drain")
 
 
 def ks_drift_stream(spark: SparkSession, src_dir: str,
@@ -608,21 +544,9 @@ def ks_drift_stream(spark: SparkSession, src_dir: str,
     reference = ks_reference(ref, value_col, round_to,
                              materialize=True)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (ks_score(batch_df, value_col, reference)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"ks drift drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir,
+               lambda b: ks_score(b, value_col, reference),
+               timeout, "ks drift drain")
 
 
 def quality_score_stream(spark: SparkSession, src_dir: str,
@@ -651,25 +575,15 @@ def quality_score_stream(spark: SparkSession, src_dir: str,
     byte-identical rows (dedupe on ``batch_id`` at read)."""
     from picoprobedataflow_spark.operators.mlfit import logreg_predict
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _score(batch_df: DataFrame) -> DataFrame:
         raw = logreg_predict(batch_df, feature_cols, weights,
                              round_digits=None)
-        (batch_df.select(F.col(id_col),
-                         F.round(raw, 6).alias("score"),
-                         (raw >= threshold).alias("keep"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
+        return batch_df.select(F.col(id_col),
+                               F.round(raw, 6).alias("score"),
+                               (raw >= threshold).alias("keep"))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"quality score drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir, _score,
+               timeout, "quality score drain")
 
 
 def nb_score_stream(spark: SparkSession, src_dir: str,
@@ -700,25 +614,15 @@ def nb_score_stream(spark: SparkSession, src_dir: str,
     frozen = NBModel(model.llr.localCheckpoint(eager=True),
                      model.prior_logodds, model.oov_llr, model.alpha)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (nb_predict(batch_df, frozen, tokens_col, id_col=id_col,
-                    round_digits=None)
-         .select(F.col(id_col), "n_tok",
-                 F.round("score", 6).alias("score"),
-                 F.col("pred").alias("keep"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
+    def _score(batch_df: DataFrame) -> DataFrame:
+        return (nb_predict(batch_df, frozen, tokens_col, id_col=id_col,
+                           round_digits=None)
+                .select(F.col(id_col), "n_tok",
+                        F.round("score", 6).alias("score"),
+                        F.col("pred").alias("keep")))
 
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"nb score drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir, _score,
+               timeout, "nb score drain")
 
 
 def chi2_drift_stream(spark: SparkSession, src_dir: str,
@@ -752,18 +656,6 @@ def chi2_drift_stream(spark: SparkSession, src_dir: str,
     reference = chi2_reference(ref, cat_col, top_k,
                                materialize=True)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (chi2_score(batch_df, cat_col, reference)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out_dir))
-
-    q = (spark.readStream.schema(schema).parquet(src_dir)
-         .writeStream
-         .option("checkpointLocation", ckpt_dir)
-         .foreachBatch(_process)
-         .trigger(availableNow=True)
-         .start())
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"chi2 drift drain did not finish in {timeout}s")
+    drain_gate(spark, src_dir, schema, ckpt_dir, out_dir,
+               lambda b: chi2_score(b, cat_col, reference),
+               timeout, "chi2 drift drain")

@@ -40,8 +40,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from picoprobedataflow_spark.streaming.dedup_stream import (
-    _state, _write_epoch, batch_anti_state)
+from picoprobedataflow_spark.streaming.loop import (
+    batch_anti_state, ensure_params, read_state, start_epoch_loop,
+    write_epoch)
 
 SUBSTR_SIG_SCHEMA = "sig string"
 
@@ -63,19 +64,17 @@ def run_substr_clean_stream(doc_stream: DataFrame, state_dir: str,
     mixed state silently stops matching old corpus text)."""
     from picoprobedataflow_spark.operators.dedup import (
         kmr_fingerprint_positions, remove_duplicate_substrings)
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        _ensure_params
 
     spark = doc_stream.sparkSession
-    _ensure_params(spark, state_dir, {"min_len": str(min_len)})
+    ensure_params(spark, state_dir, {"min_len": str(min_len)})
     sig_dir = os.path.join(state_dir, "sigs")
     out_dir = os.path.join(state_dir, "cleaned")
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        seen = _state(spark, sig_dir, SUBSTR_SIG_SCHEMA,
-                      before_epoch=epoch_id)
+        seen = read_state(spark, sig_dir, SUBSTR_SIG_SCHEMA,
+                          before_epoch=epoch_id)
         # The batch fingerprints ONCE: the loop owns the persisted
         # sigs frame and shares it between the deletion pass and the
         # new-state write (review fix — the op invoked per
@@ -97,17 +96,11 @@ def run_substr_clean_stream(doc_stream: DataFrame, state_dir: str,
                           .select("sig").distinct())
             new_sigs = batch_anti_state(batch_sigs, seen, ["sig"],
                                         batch_keys=batch_sigs)
-            # cleaned BEFORE state (the dedup_stream replay rule).
-            _write_epoch(cleaned, out_dir, epoch_id)
-            _write_epoch(new_sigs, sig_dir, epoch_id)
+            # cleaned BEFORE state (the loop-kit replay rule).
+            write_epoch(cleaned, out_dir, epoch_id)
+            write_epoch(new_sigs, sig_dir, epoch_id)
         finally:
             sigs.unpersist()
 
-    writer = (doc_stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_epoch_loop(doc_stream, _process, checkpoint_dir,
+                            available_now)

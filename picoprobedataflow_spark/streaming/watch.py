@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from picoprobedataflow_spark.io.binary_files import file_manifest
+from picoprobedataflow_spark.streaming.loop import start_epoch_loop
 
 
 def file_watch_stream(spark: SparkSession, directory: str,
@@ -65,14 +66,7 @@ def run_ingest_stream(stream: DataFrame, checkpoint_dir: str,
         if output_path is not None:
             manifest.write.mode("append").parquet(output_path)
 
-    writer = (stream.writeStream
-              .foreachBatch(_process)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    return start_epoch_loop(stream, _process, checkpoint_dir, available_now)
 
 
 def interval_attribution_join(clicks: DataFrame, purchases: DataFrame,

@@ -1228,7 +1228,7 @@ def test_batch_anti_state_plan_and_values(spark):
     two BroadcastHashJoins with ZERO exchanges on the state side —
     the state is scanned map-side, never shuffled (the per-epoch-
     ∝-batch contract every streaming loop claims)."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
+    from picoprobedataflow_spark.streaming.loop import \
         batch_anti_state
 
     state = (spark.range(0, 1000)

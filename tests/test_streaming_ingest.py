@@ -1576,8 +1576,9 @@ def test_stream_state_params_persisted_and_validated(spark, tmp_path):
     the stream starts."""
     import pytest
 
-    from picoprobedataflow_spark.streaming.dedup_stream import (
-        read_params, run_incremental_dedup_stream)
+    from picoprobedataflow_spark.streaming.dedup_stream import \
+        run_incremental_dedup_stream
+    from picoprobedataflow_spark.streaming.loop import read_params
     from picoprobedataflow_spark.streaming.graph_stream import \
         run_pagerank_stream
     from picoprobedataflow_spark.streaming.index_stream import \
@@ -1694,13 +1695,13 @@ def test_stream_params_half_written_dir_reads_as_absent(spark,
     spuriously mismatches every caller."""
     import os
 
-    from picoprobedataflow_spark.streaming.dedup_stream import (
-        _ensure_params, read_params)
+    from picoprobedataflow_spark.streaming.loop import (
+        ensure_params, read_params)
 
     state = str(tmp_path / "state")
     os.makedirs(os.path.join(state, "params"))
     assert read_params(spark, state) is None
-    _ensure_params(spark, state, {"k": "3"})
+    ensure_params(spark, state, {"k": "3"})
     assert read_params(spark, state) == {"k": "3"}
 
 
@@ -1714,8 +1715,9 @@ def test_image_stream_params_and_ivf_digest_order_insensitive(
     centroid VALUE still rejects."""
     import pytest
 
-    from picoprobedataflow_spark.streaming.dedup_stream import (
-        read_params, run_image_dedup_stream)
+    from picoprobedataflow_spark.streaming.dedup_stream import \
+        run_image_dedup_stream
+    from picoprobedataflow_spark.streaming.loop import read_params
     from picoprobedataflow_spark.streaming.index_stream import \
         run_ivf_index_stream
 
@@ -1768,7 +1770,7 @@ def test_image_stream_params_and_ivf_digest_order_insensitive(
 
 
 def test_fs_list_connect_fallback_branch(tmp_path):
-    """The Spark-Connect degradation path of _fs_list, simulated
+    """The Spark-Connect degradation path of fs_list, simulated
     with a session object that has no _jvm: local paths fall back to
     the os probe (round-16 review find — Connect users with local
     state dirs must keep working), file:-prefixed local paths
@@ -1776,8 +1778,7 @@ def test_fs_list_connect_fallback_branch(tmp_path):
     reading as absent."""
     import pytest
 
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        _fs_list
+    from picoprobedataflow_spark.streaming.loop import fs_list
 
     class _NoJvm:
         @property
@@ -1788,22 +1789,59 @@ def test_fs_list_connect_fallback_branch(tmp_path):
     d = tmp_path / "state"
     d.mkdir()
     (d / "epoch=0").mkdir()
-    assert _fs_list(fake, str(d)) == ["epoch=0"]
-    assert _fs_list(fake, "file://" + str(d)) == ["epoch=0"]
-    assert _fs_list(fake, str(tmp_path / "missing")) is None
+    assert fs_list(fake, str(d)) == ["epoch=0"]
+    assert fs_list(fake, "file://" + str(d)) == ["epoch=0"]
+    assert fs_list(fake, str(tmp_path / "missing")) is None
     with pytest.raises(NotImplementedError, match="non-Connect"):
-        _fs_list(fake, "s3a://bucket/state")
+        fs_list(fake, "s3a://bucket/state")
     # round-17 ADVICE fix: the single-slash Hadoop Path rendering
     # and the localhost authority resolve to the same local dir; an
     # authority naming ANOTHER host is remote and raises instead of
     # silently reading as absent (the old prefix-slice fell through
     # to os.path.isdir on the raw string for all three)
-    assert _fs_list(fake, "file:" + str(d)) == ["epoch=0"]
-    assert _fs_list(fake, "file://localhost" + str(d)) == ["epoch=0"]
+    assert fs_list(fake, "file:" + str(d)) == ["epoch=0"]
+    assert fs_list(fake, "file://localhost" + str(d)) == ["epoch=0"]
     with pytest.raises(NotImplementedError, match="non-Connect"):
-        _fs_list(fake, "file://otherhost" + str(d))
+        fs_list(fake, "file://otherhost" + str(d))
     with pytest.raises(NotImplementedError, match="non-Connect"):
-        _fs_list(fake, "hdfs://nn:8020/state")
+        fs_list(fake, "hdfs://nn:8020/state")
+
+
+class _FakeQuery:
+    """A StreamingQuery stand-in: awaitTermination returns the given
+    verdict and stop() is counted."""
+
+    def __init__(self, finished):
+        self.finished, self.stops, self.waited = finished, 0, None
+
+    def awaitTermination(self, timeout):
+        self.waited = timeout
+        return self.finished
+
+    def stop(self):
+        self.stops += 1
+
+
+def test_await_drain_timeout_stops_and_raises():
+    """The one timeout path every drain shares: an unfinished drain
+    is stopped and raises a TimeoutError that names it."""
+    import pytest
+
+    from picoprobedataflow_spark.streaming.loop import await_drain
+
+    q = _FakeQuery(finished=False)
+    with pytest.raises(TimeoutError,
+                       match="psi drift drain did not finish in 7s"):
+        await_drain(q, 7, "psi drift drain")
+    assert (q.waited, q.stops) == (7, 1)
+
+
+def test_await_drain_finished_leaves_query_alone():
+    from picoprobedataflow_spark.streaming.loop import await_drain
+
+    q = _FakeQuery(finished=True)
+    await_drain(q, 7, "psi drift drain")
+    assert (q.waited, q.stops) == (7, 0)
 
 
 def test_fn_name_lambda_and_damping_canonicalization():
@@ -1815,13 +1853,12 @@ def test_fn_name_lambda_and_damping_canonicalization():
     __name__); (b) the damping pin canonicalizes through
     repr(float(...)), so numerically identical values with
     different reprs (1 vs 1.0, numpy scalars) agree."""
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        _fn_name
+    from picoprobedataflow_spark.streaming.loop import fn_name
 
-    assert _fn_name(lambda s: 0) == "custom:unnamed"
-    assert _fn_name(
-        _fn_name) == ("picoprobedataflow_spark.streaming"
-                      ".dedup_stream._fn_name")
+    assert fn_name(lambda s: 0) == "custom:unnamed"
+    assert fn_name(
+        fn_name) == ("picoprobedataflow_spark.streaming"
+                     ".loop.fn_name")
     assert repr(float(1)) == repr(float(1.0)) == "1.0"
     import numpy as np
     assert repr(float(np.float64(0.85))) == "0.85"
@@ -1840,8 +1877,7 @@ def test_ivf_index_rebuild_after_delete_accepts_new_quantizer(
 
     import pytest
 
-    from picoprobedataflow_spark.streaming.dedup_stream import \
-        read_params
+    from picoprobedataflow_spark.streaming.loop import read_params
     from picoprobedataflow_spark.streaming.index_stream import \
         run_ivf_index_stream
 
